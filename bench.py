@@ -215,23 +215,24 @@ def run_stream_pipeline(spark, sf_dir: str) -> tuple[float, int]:
 
     n_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     # the file-stream source wants a directory; link the table in
-    stream_dir = tempfile.mkdtemp(prefix="sfs-bench-in-")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
-    pipe = Pipeline(
-        spark=spark,
-        source=FileSource(stream_dir, format="parquet"),
-        handler=InferredBatch(
-            "SELECT event_type, count(*) AS n, sum(value) AS total "
-            "FROM batch GROUP BY event_type"
-        ),
-        sink=NoopSink(),
-    )
-    t0 = time.time()
-    q = pipe.start(
-        available_now=True, checkpoint_dir=tempfile.mkdtemp(prefix="sfs-bench-")
-    )
-    q.awaitTermination()
-    return time.time() - t0, n_rows
+    with (
+        tempfile.TemporaryDirectory(prefix="sfs-bench-in-") as stream_dir,
+        tempfile.TemporaryDirectory(prefix="sfs-bench-") as checkpoint_dir,
+    ):
+        os.symlink(f"{sf_dir}/events.parquet", f"{stream_dir}/events.parquet")
+        pipe = Pipeline(
+            spark=spark,
+            source=FileSource(stream_dir, format="parquet"),
+            handler=InferredBatch(
+                "SELECT event_type, count(*) AS n, sum(value) AS total "
+                "FROM batch GROUP BY event_type"
+            ),
+            sink=NoopSink(),
+        )
+        t0 = time.time()
+        q = pipe.start(available_now=True, checkpoint_dir=checkpoint_dir)
+        q.awaitTermination()
+        return time.time() - t0, n_rows
 
 
 def _host_sample() -> dict:
